@@ -35,12 +35,22 @@ class DatDataSource extends TableProvider {
                         properties: util.Map[String, String]): Table =
     new DatTable(properties.get("path"),
       Option(properties.get("strategy")).map(_.toInt).getOrElse(0),
-      Option(properties.get("pagesPerSplit")).map(_.toInt).getOrElse(256))
+      Option(properties.get("pagesPerSplit")).map(_.toInt)
+        .getOrElse(DatDataSource.DefaultPagesPerSplit))
 }
 
 object DatDataSource {
   /** Decoded stream schema (FIXTURES.md §a6). */
   val schema: StructType = StateItem.schema
+
+  /** 4 KiB pages per split when the `pagesPerSplit` option is unset. */
+  val DefaultPagesPerSplit = 256
+
+  /** A row of [[schema]] back as the item it was decoded from. */
+  def item(r: InternalRow): StateItem =
+    StateItem(r.getBinary(0), r.getLong(1), r.getBoolean(2), r.getLong(3),
+      r.getLong(4), r.getBinary(5), r.getBinary(6), r.getBinary(7),
+      r.getBinary(8))
 }
 
 class DatTable(path: String, strategy: Int, pagesPerSplit: Int)
@@ -741,13 +751,11 @@ class DatReaderFactory(strategy: Int) extends PartitionReaderFactory {
               val o = (p - startPage) * 56
               val keepAddr =
                 (pr.addrHi == null ||
-                  java.util.Arrays.compareUnsigned(
-                    java.util.Arrays.copyOfRange(bounds, o, o + 20),
-                    pr.addrHi) <= 0) &&
+                  java.util.Arrays.compareUnsigned(bounds, o, o + 20,
+                    pr.addrHi, 0, pr.addrHi.length) <= 0) &&
                 (pr.addrLo == null ||
-                  java.util.Arrays.compareUnsigned(
-                    java.util.Arrays.copyOfRange(bounds, o + 20, o + 40),
-                    pr.addrLo) >= 0)
+                  java.util.Arrays.compareUnsigned(bounds, o + 20, o + 40,
+                    pr.addrLo, 0, pr.addrLo.length) >= 0)
               val keep = keepAddr &&
                 pr.blockLo <= graft.functions.Bytes.get64be(bounds, o + 48) &&
                 pr.blockHi >= graft.functions.Bytes.get64be(bounds, o + 40)
@@ -969,9 +977,7 @@ class DatWriterFactory(path: String, strategy: Int, blockStart: Long,
         f".part-${partBase + partitionId}%05d.idx.tmp-$taskId").toString
 
       override def write(r: InternalRow): Unit = {
-        w.write(StateItem(r.getBinary(0), r.getLong(1), r.getBoolean(2),
-          r.getLong(3), r.getLong(4), r.getBinary(5), r.getBinary(6),
-          r.getBinary(7), r.getBinary(8)))
+        w.write(DatDataSource.item(r))
         rows += 1
       }
 
@@ -1107,9 +1113,7 @@ class DatStreamingWriterFactory(path: String, strategy: Int,
         f".stream-e$epochId%d-p$partitionId%05d.idx.tmp-$taskId").toString
 
       override def write(r: InternalRow): Unit = {
-        w.write(graft.model.StateItem(r.getBinary(0), r.getLong(1),
-          r.getBoolean(2), r.getLong(3), r.getLong(4), r.getBinary(5),
-          r.getBinary(6), r.getBinary(7), r.getBinary(8)))
+        w.write(DatDataSource.item(r))
         rows += 1
       }
 

@@ -97,43 +97,128 @@ class CliSpec extends AnyFunSuite {
 
   test("asof: flagship point read on a converted dataset matches the " +
       "chain oracle (account, storage, pre-existence)") {
+    import graft.functions.Bytes
+    import graft.spark.datasource.{DatPageMetrics, DatSidecarCache}
+    import org.apache.spark.sql.graftshim.Bridge
     val tables = java.nio.file.Files
       .createTempDirectory("graft-cli-asof-tables").toString
     val out = java.nio.file.Files
       .createTempDirectory("graft-cli-asof-out").toString
     val w = writeTables(tables)
     Cli.convert(spark, tables, out)
+    // every probe is an in-process page seek: it launches no Spark job
+    // and decodes only the few pages whose .idx bounds match
+    def pagesDecoded(): Long = DatPageMetrics.pagesDecoded.sum()
+    def probe(addressHex: String, block: Long,
+              slotHex: Option[String] = None): Option[model.StateItem] = {
+      val d0 = pagesDecoded()
+      val r = Cli.asOf(spark, out, 0, addressHex, block, slotHex)
+      val pages = pagesDecoded() - d0
+      assert(pages <= 4L, s"asOf($addressHex @ $block) decoded $pages pages")
+      r
+    }
     // mid-chain account probe: as-of AT a touch block must return exactly
     // that oracle entry (history row valid FROM it)
     val (addr, touches) = w.accountOracle.groupBy(_.addressHex)
       .maxBy(_._2.size)
     val sorted = touches.sortBy(_.block)
-    val probe = sorted(sorted.size / 2)
-    val res = Cli.asOf(spark, out, 0, addr, probe.block)
-      .getOrElse(fail("account probe found nothing"))
-    assert(!res.isStorage && res.block == probe.block)
-    assert(res.nonce == probe.nonce && res.incarnation == probe.incarnation)
-    assert(BigInt(graft.functions.Bytes.hex(res.balance), 16) ==
-      BigInt(probe.balance))
-    // storage probe through the same dataset
+    val probeAt = sorted(sorted.size / 2)
     val (_, stTouches) = w.storageOracle
       .groupBy(o => (o.addressHex, o.slotHex)).maxBy(_._2.size)
     val stSorted = stTouches.sortBy(_.block)
     val sp = stSorted(stSorted.size / 2)
-    val sres = Cli.asOf(spark, out, 0, sp.addressHex, sp.block,
-        Some(sp.slotHex))
-      .getOrElse(fail("storage probe found nothing"))
-    assert(sres.isStorage && sres.block == sp.block)
-    assert(BigInt(graft.functions.Bytes.hex(sres.value), 16) ==
-      BigInt(sp.value))
-    // before the first touch the zero-state row answers (account did not
-    // exist yet): valid_from 0, zeroed fields
-    if (sorted.head.block > 1) {
-      val r0 = Cli.asOf(spark, out, 0, addr, sorted.head.block - 1)
-        .getOrElse(fail("pre-existence probe found nothing"))
-      assert(r0.block == 0L && r0.nonce == 0L &&
-        BigInt(graft.functions.Bytes.hex(r0.balance), 16) == 0)
+    // the oracles and convert run jobs of their own; count from here on
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val (res, sres) = try {
+      val res = probe(addr, probeAt.block)
+        .getOrElse(fail("account probe found nothing"))
+      assert(!res.isStorage && res.block == probeAt.block)
+      assert(res.nonce == probeAt.nonce &&
+        res.incarnation == probeAt.incarnation)
+      assert(BigInt(Bytes.hex(res.balance), 16) == BigInt(probeAt.balance))
+      // storage probe through the same dataset
+      val sres = probe(sp.addressHex, sp.block, Some(sp.slotHex))
+        .getOrElse(fail("storage probe found nothing"))
+      assert(sres.isStorage && sres.block == sp.block)
+      assert(BigInt(Bytes.hex(sres.value), 16) == BigInt(sp.value))
+      // before the first touch the zero-state row answers (account did
+      // not exist yet): valid_from 0, zeroed fields
+      if (sorted.head.block > 1) {
+        val r0 = probe(addr, sorted.head.block - 1)
+          .getOrElse(fail("pre-existence probe found nothing"))
+        assert(r0.block == 0L && r0.nonce == 0L &&
+          BigInt(Bytes.hex(r0.balance), 16) == 0)
+      }
+      Bridge.waitListenerBusEmpty(spark)
+      (res, sres)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"as-of probes launched ${jobs.get} Spark jobs")
+
+    // an orphan part (a .dat/.idx pair outside the manifest's file_list,
+    // as a failed append leaves it) holding a newer version of the probed
+    // account stays invisible
+    val latest = probe(addr, Long.MaxValue).getOrElse(fail("no latest row"))
+    val orphanDir = java.nio.file.Files
+      .createTempDirectory("graft-cli-asof-orphan").toString
+    import spark.implicits._
+    graft.spark.StateFiles.write(spark.createDataset(Seq(
+      model.StateItem.account(latest.address, latest.block + 1,
+        latest.nonce + 100, latest.incarnation, latest.balance,
+        latest.codeHash))).coalesce(1), orphanDir, strategy = 0)
+    val orphanName = graft.spark.StateFiles.manifestFileList(orphanDir)
+      .get.head.stripSuffix(".dat")
+    for (ext <- Seq(".dat", ".idx"))
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(orphanDir, orphanName + ext),
+        java.nio.file.Paths.get(out, "part-09999" + ext))
+    val afterOrphan = probe(addr, Long.MaxValue)
+      .getOrElse(fail("orphan hid the committed row"))
+    assert(afterOrphan.block == latest.block &&
+      afterOrphan.nonce == latest.nonce, "orphan part leaked into asOf")
+    // the same files without the manifest do show the orphan's row
+    val unmanaged = java.nio.file.Files
+      .createTempDirectory("graft-cli-asof-nomanifest")
+    new java.io.File(out).listFiles()
+      .filter(f => f.getName.endsWith(".dat") || f.getName.endsWith(".idx"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath,
+        unmanaged.resolve(f.getName)))
+    assert(Cli.asOf(spark, unmanaged.toString, 0, addr, Long.MaxValue)
+      .map(_.block).contains(latest.block + 1))
+
+    // without the .idx sidecars the reader decodes whole splits: the same
+    // answers, and no page counted as decoded by pruning
+    new java.io.File(out).listFiles()
+      .filter(_.getName.endsWith(".idx")).foreach(_.delete())
+    DatSidecarCache.clear()
+    val d0 = pagesDecoded()
+    val noIdx = Cli.asOf(spark, out, 0, addr, probeAt.block)
+      .getOrElse(fail("account probe without .idx found nothing"))
+    assert(noIdx.block == res.block && noIdx.nonce == res.nonce &&
+      noIdx.balance.sameElements(res.balance))
+    val sNoIdx = Cli.asOf(spark, out, 0, sp.addressHex, sp.block,
+        Some(sp.slotHex))
+      .getOrElse(fail("storage probe without .idx found nothing"))
+    assert(sNoIdx.block == sres.block && sNoIdx.value.sameElements(sres.value))
+    assert(pagesDecoded() == d0, "decoded pages counted without a sidecar")
+
+    // a committed part with a corrupt header magic fails the lookup with
+    // the planner's validation error instead of answering (the cache is
+    // cleared so an mtime-granularity hit cannot mask the rewrite)
+    val part = graft.spark.StateFiles.manifestFileList(out).get.head
+    val raf = new java.io.RandomAccessFile(
+      java.nio.file.Paths.get(out, part).toFile, "rw")
+    try raf.write(new Array[Byte](8)) finally raf.close()
+    DatSidecarCache.clear()
+    val e = intercept[IllegalArgumentException](
+      Cli.asOf(spark, out, 0, addr, probeAt.block))
+    assert(e.getMessage.contains("bad magic"), e.getMessage)
   }
 
   test("check: decoded totals match the manifest after convert") {
