@@ -833,9 +833,10 @@ object PipelineQueries {
       }, None, Some(dir => p09Sql(dir))),
 
     // The DSv2 WRITE path as a tracked benchmark entry (p06/p10 measure
-    // the function sink): full history → df.write (overwrite: fresh part
-    // numbers, two-phase manifest commit, old-snapshot GC) → DSv2 read
-    // back; counts-only output so the sim-literal oracle applies.
+    // StateFiles.write; both commit through StateFiles.publish): full
+    // history → df.write (overwrite, task-staged parts, driver publish)
+    // → DSv2 read back; counts-only output so the sim-literal oracle
+    // applies.
     "p12_dat_dsv2_write" -> QuerySpec(
       (s, dir) => {
         import s.implicits._

@@ -3,12 +3,9 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 
 /** The reference's `copy_file` strategy-conversion tool
-  * (erigon_extract.c:2047-2100) as a user-facing CLI: decode a `.dat`
-  * dataset with one strategy and re-encode it with another —
-  *
-  * {{{
-  *   sbt "runMain graft.spark.CopyFile <inDir> <outDir> <strategyIn> <strategyOut>"
-  * }}}
+  * (erigon_extract.c:2047-2100): decode a `.dat` dataset with one
+  * strategy and re-encode it with another. The CLI form is
+  * `graft.Cli copy <inDir> <outDir> <strategyIn> <strategyOut>`.
   *
   * The read path is the page-split DSv2 source, so the conversion is
   * distributed: each split decodes independently and each output partition
@@ -19,42 +16,15 @@ import org.apache.spark.sql.SparkSession
   */
 object CopyFile {
 
-  /** Library form: convert a dataset between strategies, preserving the
-    * manifest's block range. Returns (accounts, storageSlots) written.
+  /** Convert a dataset between strategies, preserving the manifest's
+    * block range.
     */
   def convert(spark: SparkSession, inDir: String, outDir: String,
               strategyIn: Int, strategyOut: Int): Unit = {
-    val (blockStart, blockEnd) = manifestBlockRange(inDir)
+    def field(name: String): Long =
+      StateFiles.manifestField(inDir, name).getOrElse(0L)
     val items = StateFiles.read(spark, inDir, strategyIn)
-    StateFiles.write(items, outDir, strategyOut, blockStart, blockEnd)
-  }
-
-  private def manifestBlockRange(dir: String): (Long, Long) = {
-    val p = java.nio.file.Paths.get(dir, "_manifest.json")
-    if (!java.nio.file.Files.exists(p)) (0L, 0L)
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-      def field(name: String): Long = {
-        val m = s"""\"$name\":(-?\\d+)""".r.findFirstMatchIn(s)
-        m.map(_.group(1).toLong).getOrElse(0L)
-      }
-      (field("block_start"), field("block_end"))
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    require(args.length == 4,
-      "usage: CopyFile <inDir> <outDir> <strategyIn> <strategyOut>")
-    val Array(inDir, outDir, sIn, sOut) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.Sessions.withDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    convert(spark, inDir, outDir, sIn.toInt, sOut.toInt)
-    spark.stop()
+    StateFiles.write(items, outDir, strategyOut, field("block_start"),
+      field("block_end"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.codec.{Header, StateReader, StateWriter}
@@ -9,8 +10,11 @@ import graft.model.StateItem
 /** S7/S8 — the reference's `.dat` file format as a Spark source/sink
   * (erigon_extract.c:1340-1428 reader, 824-1269 writer, 2266-2288 header).
   *
-  * Sink: one `part-NNNNN.dat` per partition, each a 256-byte header plus
-  * page-aligned opcode stream (the merge output layout, page_shift 12).
+  * Sink: one `part-NNNNN.dat` per non-empty partition, each a 256-byte
+  * header plus page-aligned opcode stream (the merge output layout,
+  * page_shift 12). Every `.dat` writer — write/append/compact here and
+  * the DSv2 batch and streaming sinks — stages parts in its tasks and
+  * commits them through one routine, [[publish]].
   *
   * Source: files are NOT read sequentially. Because the writer restarts
   * compression state at every 4 KiB page boundary, every page is
@@ -47,28 +51,23 @@ object StateFiles {
   private[spark] val PairSuffixLen: Int = PageSize
 
   /** Write a sorted Dataset[StateItem] as header-prefixed page-aligned .dat
-    * files, one per partition (partition ordering = caller's sort).
+    * files, one per non-empty partition (partition ordering = caller's
+    * sort). Over an existing dataset this is an OVERWRITE: a fresh
+    * snapshot under fresh part names, the old parts deleted after the
+    * manifest swap (see [[publish]]).
     */
   def write(items: Dataset[StateItem], dir: String, strategy: Int,
             blockStart: Long = 0L, blockEnd: Long = 0L): Unit =
-    writeCore(items, dir, strategy, blockStart, blockEnd, partBase = 0,
-      mergeManifest = false, streamBatchId = -1L)
+    writeCore(items, dir, strategy, blockStart, blockEnd, overwrite = true)
 
   /** Incremental APPEND: new part files after the existing ones, manifest
     * totals merged — the daily-increment flow (changesets are an
     * append-only log; each increment converts its block range and lands
     * as additional files). Reads stay pruned and correct because the
     * `.idx` bounds are true per-page min/max for ANY order — overlapping
-    * address ranges across increments just mean more splits match.
-    *
-    * COMMIT PROTOCOL: the manifest's `file_list` is the authoritative
-    * snapshot — the DSv2 source reads exactly those files when a manifest
-    * is present — and the manifest is replaced ATOMICALLY as the LAST
-    * step. A crash mid-append leaves orphan part files on disk but
-    * readers still see the previous consistent snapshot; a retried
-    * append commits past the orphans (they stay unreferenced garbage, no
-    * duplicated rows). Single-writer: concurrent appends to one dataset
-    * are not supported (no lock service here).
+    * address ranges across increments just mean more splits match. A
+    * crash mid-append leaves the previous snapshot readable (see
+    * [[publish]]).
     *
     * `streamBatchId` (optional, for streaming foreachBatch writers):
     * recorded in the manifest ATOMICALLY with the append, so a
@@ -80,32 +79,36 @@ object StateFiles {
   def append(items: Dataset[StateItem], dir: String, strategy: Int,
              blockStart: Long = 0L, blockEnd: Long = 0L,
              streamBatchId: Long = -1L, streamId: String = ""): Unit = {
-    val partBase = nextPartBase(dir)
-    // a dataset with part files but NO manifest is a torn write — its
-    // strategy and committed contents are unknowable; refuse rather than
-    // risk a mixed-strategy dataset that decodes as garbage
-    require(partBase == 0 || manifestField(dir, "strategy").isDefined,
-      s"$dir has part files but no manifest — cannot append to a torn " +
-        "dataset")
-    manifestField(dir, "strategy").foreach(s0 =>
-      require(s0 == strategy.toLong,
-        s"append strategy $strategy != dataset strategy $s0"))
     // a streaming append must carry its writer identity: the batch id is
     // only monotone WITHIN one linear stream, so an id without an owner
     // cannot support the replay-skip contract
     require(streamBatchId < 0L || streamId.nonEmpty,
       "streaming append (streamBatchId >= 0) requires a streamId — " +
         "use StateFiles.streamIdentity(checkpointDir)")
-    // ownership check BEFORE any part file is written (commitManifest
-    // re-checks as a backstop, but by then orphans would exist)
+    requireAppendable(dir, strategy, streamId)
+    writeCore(items, dir, strategy, blockStart, blockEnd, overwrite = false,
+      streamBatchId = streamBatchId, streamId = streamId)
+  }
+
+  /** The append guards, run before any part is staged: a torn directory
+    * (part files, no manifest) has unknowable strategy and contents; a
+    * strategy mismatch would make the existing parts decode as garbage;
+    * a stream-owned dataset takes appends only from its owner
+    * (commitManifest re-checks the owner as a backstop, but by then
+    * orphans would exist).
+    */
+  private[spark] def requireAppendable(dir: String, strategy: Int,
+                                       streamId: String = ""): Unit = {
+    val s0 = manifestField(dir, "strategy")
+    require(s0.isDefined || partFiles(dir).isEmpty,
+      s"$dir has part files but no manifest — cannot append to a torn dataset")
+    s0.foreach(s => require(s == strategy.toLong,
+      s"append strategy $strategy != dataset strategy $s"))
     if (streamId.nonEmpty)
       manifestStringField(dir, "stream_id").foreach(owner =>
         require(owner == streamId,
           s"dataset $dir is stream-owned by $owner; " +
             s"refusing append from stream $streamId"))
-    writeCore(items, dir, strategy, blockStart, blockEnd, partBase,
-      mergeManifest = true, streamBatchId = streamBatchId,
-      streamId = streamId)
   }
 
   /** COMPACTION — the archive-maintenance op the incremental flows
@@ -121,26 +124,18 @@ object StateFiles {
     *    (address, isStorage, slot, block) order — restoring the sorted
     *    layout interleaved increments erode, which is what keeps the
     *    `.idx` bounds tight and split pruning effective;
-    *  - new part files land in the SAME directory with part numbers
-    *    continuing past the old ones (both generations coexist on disk);
-    *  - the atomic manifest swap — the dataset's ONE commit point —
-    *    switches readers to the new file list and mints a new
-    *    `dataset_id`, so a live streaming tail (st08) pinned to the old
+    *  - the new generation is published as an overwrite: fresh part
+    *    names, then the atomic manifest swap, which mints a new
+    *    `dataset_id` so a live streaming tail (st08) pinned to the old
     *    generation fails LOUDLY instead of silently re-reading
-    *    reshuffled offsets;
-    *  - only then is the old generation's files deleted (on an object
-    *    store this delete would be a grace-period GC).
-    *
-    * Crash safety: death before the swap leaves orphan new-generation
-    * parts invisible to the manifest (the established orphan contract);
-    * death after the swap but mid-GC leaves unreferenced old files —
-    * harmless garbage, re-deletable.
+    *    reshuffled offsets, then the old generation's deletion (on an
+    *    object store this delete would be a grace-period GC).
     */
   def compact(spark: SparkSession, dir: String, strategy: Int,
               targetParts: Int = 1): Unit = {
     require(targetParts >= 1, s"compact: targetParts $targetParts")
-    val oldFiles = manifestFileList(dir).getOrElse(
-      throw new IllegalStateException(s"compact: no manifest in $dir"))
+    if (manifestFileList(dir).isEmpty)
+      throw new IllegalStateException(s"compact: no manifest in $dir")
     manifestField(dir, "strategy").foreach(s0 =>
       require(s0 == strategy.toLong,
         s"compact strategy $strategy != dataset strategy $s0"))
@@ -158,17 +153,9 @@ object StateFiles {
     // fields would reset the skip and let a replayed epoch double-append
     val sb = manifestField(dir, "stream_batch").getOrElse(-1L)
     val sid = manifestStringField(dir, "stream_id").getOrElse("")
-    // the scan executes inside this job, strictly before the commit:
-    // writeCore's final manifest write REPLACES the snapshot (fresh
-    // dataset_id — overwrite semantics, not merge)
-    writeCore(sorted, dir, strategy, bStart, bEnd,
-      partBase = nextPartBase(dir), mergeManifest = false,
+    // the scan executes inside writeCore's job, strictly before publish
+    writeCore(sorted, dir, strategy, bStart, bEnd, overwrite = true,
       streamBatchId = sb, streamId = sid)
-    oldFiles.foreach { f =>
-      Files.deleteIfExists(Paths.get(dir, f))
-      Files.deleteIfExists(
-        Paths.get(dir, f.stripSuffix(".dat") + ".idx"))
-    }
   }
 
   /** Small-files POLICY for [[compact]] — the threshold an [[append]] /
@@ -313,47 +300,44 @@ object StateFiles {
       }
     }
 
-  /** Per-part stat bundle carried from tasks to the manifest commit
-    * (row totals + write-time anomaly counters).
+  /** One part staged by a write task: its encoded `.dat` (header +
+    * page-aligned body) and `.idx` sidecar in hidden temp files, waiting
+    * for [[publish]] to name and commit them, plus the manifest counters
+    * (`bytes` is the body length). An empty partition stages nothing
+    * (`rows == 0`, no files). It doubles as the DSv2 sink's task commit
+    * message.
     */
-  private[spark] final case class PartStats(pid: Int, bytes: Long,
-                                            accounts: Long, slots: Long,
-                                            anomIncDecrease: Long,
-                                            anomCodeHashNoInc: Long)
+  private[spark] final case class StagedPart(datTmp: String, idxTmp: String,
+                                             bytes: Long, accounts: Long,
+                                             slots: Long,
+                                             anomIncDecrease: Long,
+                                             anomCodeHashNoInc: Long)
+      extends org.apache.spark.sql.connector.write.WriterCommitMessage {
+    def rows: Long = accounts + slots
 
-  /** One encoded part: the full `.dat` bytes (header + page-aligned body)
-    * and its `.idx` sidecar, plus the stat counters. Shared by the
-    * function sink below and the DataSource V2 write path.
-    */
-  private[spark] final case class EncodedPart(dat: Array[Byte],
-                                              idx: Array[Byte],
-                                              bodyBytes: Long,
-                                              accounts: Long, slots: Long,
-                                              anomIncDecrease: Long,
-                                              anomCodeHashNoInc: Long)
-
-  /** Encode one partition's (pre-sorted) items into the reference layout.
-    * None for an empty partition (no file emitted).
-    */
-  private[spark] def encodePart(it: Iterator[StateItem], strategy: Int,
-                                blockStart: Long,
-                                blockEnd: Long): Option[EncodedPart] = {
-    if (!it.hasNext) return None
-    val w = new StateWriter(strategy, PageShift, baseOffset = Header.Size)
-    it.foreach(w.write)
-    Some(finishPart(w, strategy, blockStart, blockEnd))
+    /** Deletes the temps of a part that will not be published. */
+    def discard(): Unit = if (rows > 0) {
+      Files.deleteIfExists(Paths.get(datTmp))
+      Files.deleteIfExists(Paths.get(idxTmp))
+    }
   }
 
-  /** Streaming form of [[encodePart]]: callers feed a [[StateWriter]] (of
-    * [[partWriter]]) row by row and finish here — the DSv2 DataWriter
-    * shape, same memory profile as the iterator form.
+  /** A fresh encoder for one part; feed it the partition's (pre-sorted)
+    * rows, then [[stage]] it.
     */
   private[spark] def partWriter(strategy: Int): StateWriter =
     new StateWriter(strategy, PageShift, baseOffset = Header.Size)
 
-  private[spark] def finishPart(w: StateWriter, strategy: Int,
-                                blockStart: Long,
-                                blockEnd: Long): EncodedPart = {
+  /** Finish the rows fed to `w` as one part and write it to the temps
+    * `.stage-<tag>.dat.tmp` / `.stage-<tag>.idx.tmp` in `dir`. `tag` is
+    * unique per task attempt, so retried and speculative attempts never
+    * share a temp; a failed write removes its temps.
+    */
+  private[spark] def stage(w: StateWriter, dir: String, tag: String,
+                           strategy: Int, blockStart: Long,
+                           blockEnd: Long): StagedPart = {
+    if (w.countAccounts + w.countStorageSlots == 0)
+      return StagedPart("", "", 0L, 0L, 0L, 0L, 0L)
     val body = w.toArray
     val header = Header.build(
       endOfStates = Header.Size.toLong + body.length, PageShift,
@@ -410,8 +394,15 @@ object StateFiles {
         java.util.Arrays.copyOf(full, math.min(full.length, PairPrefixLen)),
         java.util.Arrays.copyOfRange(full,
           math.max(0, full.length - PairSuffixLen), full.length)))
-    EncodedPart(full, idx, body.length.toLong, w.countAccounts,
-      w.countStorageSlots, w.anomalyIncarnationDecrease,
+    val datTmp = Paths.get(dir, s".stage-$tag.dat.tmp")
+    val idxTmp = Paths.get(dir, s".stage-$tag.idx.tmp")
+    try { Files.write(datTmp, full); Files.write(idxTmp, idx) }
+    catch {
+      case e: Throwable =>
+        Files.deleteIfExists(datTmp); Files.deleteIfExists(idxTmp); throw e
+    }
+    StagedPart(datTmp.toString, idxTmp.toString, body.length.toLong,
+      w.countAccounts, w.countStorageSlots, w.anomalyIncarnationDecrease,
       w.anomalyCodeHashNoIncarnation)
   }
 
@@ -424,20 +415,81 @@ object StateFiles {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Names of the `part-*.dat` / `part-*.idx` files in `dir`. */
+  private def partFiles(dir: String): Seq[String] = {
+    if (!Files.exists(Paths.get(dir))) return Nil
+    val listed = Files.list(Paths.get(dir))
+    try listed.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith("part-") &&
+        (n.endsWith(".dat") || n.endsWith(".idx")))
+      .toList
+    finally listed.close()
+  }
+
+  /** THE commit of every `.dat` writer: [[write]], [[append]],
+    * [[compact]] and the DSv2 batch and streaming sinks all end here.
+    * `staged` comes in partition order, which is the dataset's order.
+    *
+    *  1. Empty parts are dropped.
+    *  2. The rest get FRESH part numbers, past every part file on disk,
+    *     so no rename ever lands on a name an older snapshot used: a
+    *     reader holding the old manifest reads the old bytes, or finds
+    *     them deleted and fails, but never reads new bytes under an old
+    *     name.
+    *  3. The temps are renamed into place.
+    *  4. The manifest is replaced atomically — the dataset's ONE commit
+    *     point ([[commitManifest]]): merged into the previous one on
+    *     append, a fresh snapshot with a new `dataset_id` on overwrite.
+    *  5. On overwrite, every part file outside the new `file_list` — the
+    *     old snapshot and any orphans — is deleted (best-effort: the
+    *     snapshot is already committed).
+    *
+    * A crash before step 4 leaves orphan part files that the manifest
+    * does not list: readers keep the previous snapshot, a retried append
+    * commits past them, the next overwrite deletes them. A crash in step
+    * 5 leaves unreferenced garbage. Single-writer: concurrent writes to
+    * one dataset are not supported (no lock service here).
+    */
+  private[spark] def publish(dir: String, strategy: Int, blockStart: Long,
+                             blockEnd: Long, staged: Seq[StagedPart],
+                             overwrite: Boolean, streamBatchId: Long = -1L,
+                             streamId: String = ""): Unit = {
+    val parts = staged.filter(_.rows > 0)
+    val base = partFiles(dir)
+      .flatMap(_.stripPrefix("part-").dropRight(4).toIntOption)
+      .foldLeft(-1)(math.max) + 1
+    val names = parts.indices.map(i => f"part-${base + i}%05d")
+    def move(tmp: String, name: String): Unit =
+      Files.move(Paths.get(tmp), Paths.get(dir, name),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    parts.zip(names).foreach { case (p, n) =>
+      move(p.datTmp, n + ".dat"); move(p.idxTmp, n + ".idx")
+    }
+    commitManifest(dir, strategy, blockStart, blockEnd,
+      mergeManifest = !overwrite, names.map(_ + ".dat"), parts,
+      streamBatchId, streamId)
+    if (overwrite) {
+      val keep = names.toSet
+      partFiles(dir).filterNot(n => keep(n.dropRight(4))).foreach { n =>
+        try Files.deleteIfExists(Paths.get(dir, n))
+        catch { case _: java.io.IOException => () }
+      }
+    }
+  }
+
   /** Write/merge the dataset-level manifest — the multi-file replacement
     * for the reference's single 256-byte header (C11): totals + layout
     * params in one JSON (the per-file headers remain byte-compatible). On
     * merge (append), totals accumulate and the block range widens. The
     * `file_list` snapshot is replaced ATOMICALLY as the last step — this
-    * IS the dataset-level commit point. Shared by the function sink and
-    * the DSv2 BatchWrite.commit.
+    * IS the dataset-level commit point, reached only through [[publish]].
     */
-  private[spark] def commitManifest(dir: String, strategy: Int,
-                                    blockStart: Long, blockEnd: Long,
-                                    mergeManifest: Boolean,
-                                    parts: Seq[PartStats],
-                                    streamBatchId: Long = -1L,
-                                    streamId: String = ""): Unit = {
+  private def commitManifest(dir: String, strategy: Int, blockStart: Long,
+                             blockEnd: Long, mergeManifest: Boolean,
+                             newNames: Seq[String], parts: Seq[StagedPart],
+                             streamBatchId: Long,
+                             streamId: String): Unit = {
     def prev(name: String): Long =
       if (mergeManifest) manifestField(dir, name).getOrElse(0L) else 0L
     val accounts = parts.map(_.accounts).sum + prev("accounts")
@@ -460,7 +512,6 @@ object StateFiles {
         math.max(blockEnd,
           manifestField(dir, "block_end").getOrElse(blockEnd))
       else blockEnd
-    val newNames = parts.map(p => f"part-${p.pid}%05d.dat").sorted
     val allNames =
       (if (mergeManifest) manifestFileList(dir).getOrElse(Seq.empty)
        else Seq.empty) ++ newNames
@@ -470,8 +521,10 @@ object StateFiles {
     // preserved by every append, REPLACED by an overwrite — the streaming
     // source pins it in its offsets, so a stream whose consumed prefix
     // was invalidated by an overwrite fails loudly even when the new
-    // snapshot reuses the same part names (the function sink numbers
-    // from 0 again; names alone cannot distinguish the generations).
+    // snapshot reuses a part name (every write takes fresh numbers, but
+    // once an overwrite with no rows has deleted every part file,
+    // numbering restarts at 0; names alone cannot tell the generations
+    // apart).
     // Merging into a pre-existing manifest that PREDATES the field keeps
     // it ABSENT rather than minting mid-life: a live stream pinned the
     // absent generation ("") at start, and minting on a legitimate
@@ -514,48 +567,24 @@ object StateFiles {
       manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  /** First part number AFTER the existing files (0 for a fresh dir). */
-  private[spark] def nextPartBase(dir: String): Int = {
-    if (!Files.exists(Paths.get(dir))) return 0
-    val stream = Files.list(Paths.get(dir))
-    try {
-      val it = stream.iterator()
-      var maxPart = -1
-      while (it.hasNext) {
-        val name = it.next().getFileName.toString
-        if (name.startsWith("part-") && name.endsWith(".dat")) {
-          val n = name.stripPrefix("part-").stripSuffix(".dat")
-          try maxPart = math.max(maxPart, n.toInt)
-          catch { case _: NumberFormatException => () }
-        }
-      }
-      maxPart + 1
-    } finally stream.close()
-  }
-
   private def writeCore(items: Dataset[StateItem], dir: String,
                         strategy: Int, blockStart: Long, blockEnd: Long,
-                        partBase: Int, mergeManifest: Boolean,
-                        streamBatchId: Long,
+                        overwrite: Boolean, streamBatchId: Long = -1L,
                         streamId: String = ""): Unit = {
     val spark = items.sparkSession
     import spark.implicits._
     Files.createDirectories(Paths.get(dir))
-    val rows = items.mapPartitions { it =>
-      val pid = partBase + org.apache.spark.TaskContext.getPartitionId()
-      encodePart(it, strategy, blockStart, blockEnd) match {
-        case None => Iterator.empty
-        case Some(part) =>
-          // temp + atomic rename: retried/speculative attempts each
-          // produce a complete file; the rename is all-or-nothing
-          atomicWrite(dir, f"part-$pid%05d.dat", part.dat)
-          atomicWrite(dir, f"part-$pid%05d.idx", part.idx)
-          Iterator.single(PartStats(pid, part.bodyBytes, part.accounts,
-            part.slots, part.anomIncDecrease, part.anomCodeHashNoInc))
-      }
+    val writeId = java.util.UUID.randomUUID().toString
+    val staged = items.mapPartitions { it =>
+      val tc = org.apache.spark.TaskContext.get()
+      val w = partWriter(strategy)
+      it.foreach(w.write)
+      Iterator.single(stage(w, dir,
+        s"$writeId-p${tc.partitionId()}-t${tc.taskAttemptId()}", strategy,
+        blockStart, blockEnd))
     }.collect()
-    commitManifest(dir, strategy, blockStart, blockEnd, mergeManifest,
-      rows.toSeq, streamBatchId, streamId)
+    publish(dir, strategy, blockStart, blockEnd, staged.toSeq, overwrite,
+      streamBatchId, streamId)
   }
 
   /** Page-parallel read, delegated to the DataSource V2

@@ -89,12 +89,8 @@ object TxBodyFiles {
       s"""{"format":"graft-txbodies","block_start":$blockStart,""" +
         s""""block_end":$blockEnd,"files":${stats.length},""" +
         s""""blocks":$blocks,"bytes":$bytes,"file_list":$fileListJson}"""
-    val mTmp = Paths.get(dir, s".manifest.tmp-${java.util.UUID.randomUUID()}")
-    Files.write(mTmp,
+    StateFiles.atomicWrite(dir, "_manifest.json",
       manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(mTmp, Paths.get(dir, "_manifest.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     (stats.length.toLong, blocks, bytes)
   }
 

@@ -512,9 +512,9 @@ class PipelineSpec extends AnyFunSuite {
       history.withColumnRenamed("valid_from_block", "block"))
     val fmt = "graft.spark.datasource.DatDataSource"
     // 10 rows over 64 range partitions: most partitions are EMPTY — the
-    // empty DataWriters commit pid=-1 sentinels that the driver commit
-    // must drop (unfiltered, Files.move(Paths.get(""), …) throws and the
-    // manifest records a bogus part--0001.dat)
+    // empty DataWriters stage no files, and the driver commit must drop
+    // those parts (unfiltered, the rename of an empty temp name throws
+    // or the manifest lists a part with no rows)
     val tiny = items.toDF().limit(10)
       .repartitionByRange(64, col("address"), col("block"))
     val dir = Files.createTempDirectory("graft-dsv2-empty").toString
@@ -524,7 +524,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(back.count() == 10, "rows lost through empty-partition write")
     val mf = new String(Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_manifest.json")))
-    assert(!mf.contains("part--"), s"sentinel leaked into manifest: $mf")
+    assert(!mf.contains("part--"), s"bogus part name in manifest: $mf")
     // only non-empty partitions produced files
     val nFiles = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".dat"))
@@ -532,34 +532,48 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("DSv2 overwrite: fresh part names, old snapshot never rewritten") {
+    import spark.implicits._
     val items = StateFormat.asItems(
       history.withColumnRenamed("valid_from_block", "block"))
     val fmt = "graft.spark.datasource.DatDataSource"
-    val dir = Files.createTempDirectory("graft-dsv2-iso").toString
-    def partNames = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.endsWith(".dat")).toSet
-    items.toDF().write.format(fmt).option("strategy", "0")
-      .mode("append").save(dir)
-    val oldNames = partNames
-    val oldBytes = oldNames.map(n => n ->
-      Files.readAllBytes(java.nio.file.Paths.get(dir, n))).toMap
     val mid = world.latestBlock / 2
-    items.toDF().filter(col("block") <= mid).write.format(fmt)
-      .option("strategy", "0").mode("overwrite").save(dir)
-    val newNames = partNames
-    // isolation: the new snapshot's names are disjoint from the old ones,
-    // so at no instant did an old-manifest reader see new bytes under an
-    // old name — old files are either intact or GC'd, never rewritten
-    assert(newNames.intersect(oldNames).isEmpty,
-      s"overwrite reused old part names: ${newNames.intersect(oldNames)}")
-    assert(oldNames.forall(n =>
-      !Files.exists(java.nio.file.Paths.get(dir, n)) ||
-        Files.readAllBytes(java.nio.file.Paths.get(dir, n))
-          .sameElements(oldBytes(n))),
-      "old snapshot bytes changed in place")
-    val back = spark.read.format(fmt).option("strategy", "0").load(dir)
-    assert(back.count() ==
-      items.toDF().filter(col("block") <= mid).count())
+    val lower = items.filter(col("block") <= mid).as[graft.model.StateItem]
+    // both overwrite entry points publish through the same commit path
+    val overwrites = Seq[(String, String => Unit)](
+      "df.write.mode(overwrite)" -> (dir => lower.toDF().write.format(fmt)
+        .option("strategy", "0").mode("overwrite").save(dir)),
+      "StateFiles.write" -> (dir =>
+        graft.spark.StateFiles.write(lower, dir, strategy = 0)))
+    for ((how, overwrite) <- overwrites) {
+      val dir = Files.createTempDirectory("graft-dsv2-iso").toString
+      def partNames = new java.io.File(dir).listFiles()
+        .map(_.getName).filter(_.startsWith("part-")).toSet
+      items.toDF().write.format(fmt).option("strategy", "0")
+        .mode("append").save(dir)
+      val oldNames = partNames
+      val oldBytes = oldNames.map(n => n ->
+        Files.readAllBytes(java.nio.file.Paths.get(dir, n))).toMap
+      overwrite(dir)
+      val newNames = partNames
+      // isolation: the new snapshot's names are disjoint from the old
+      // ones, so at no instant did an old-manifest reader see new bytes
+      // under an old name — old files are either intact or GC'd, never
+      // rewritten
+      assert(newNames.intersect(oldNames).isEmpty,
+        s"$how reused old part names: ${newNames.intersect(oldNames)}")
+      assert(oldNames.forall(n =>
+        !Files.exists(java.nio.file.Paths.get(dir, n)) ||
+          Files.readAllBytes(java.nio.file.Paths.get(dir, n))
+            .sameElements(oldBytes(n))),
+        s"$how changed old snapshot bytes in place")
+      // the old snapshot is GC'd: only the new file_list's parts remain
+      val listed = graft.spark.StateFiles.manifestFileList(dir).get
+      assert(newNames == listed.flatMap(n =>
+          Seq(n, n.stripSuffix(".dat") + ".idx")).toSet,
+        s"$how left stale parts: $newNames vs $listed")
+      val back = spark.read.format(fmt).option("strategy", "0").load(dir)
+      assert(back.count() == lower.count(), how)
+    }
   }
 
   test("DSv2 append guards: strategy mismatch and torn dir refused") {
@@ -607,16 +621,24 @@ class PipelineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-dsv2-cache").toString
     val mid = world.latestBlock / 2
     val half = items.filter(col("block") <= mid).as[graft.model.StateItem]
-    graft.spark.StateFiles.write(half, dir, strategy = 0)
+    graft.spark.StateFiles.write(half.coalesce(1), dir, strategy = 0)
+    graft.spark.StateFiles.append(items.coalesce(1), dir, strategy = 0)
     val c1 = graft.spark.StateFiles.read(spark, dir, 0).count()
-    assert(c1 == half.count())
-    // the FUNCTION sink reuses part numbers on rewrite (same names, new
-    // bytes/size/mtime) — the plan-time validation cache must re-validate,
-    // not serve the old page count/bounds
-    graft.spark.StateFiles.write(items.repartition(2), dir, strategy = 0)
+    assert(c1 == half.count() + items.count())
+    // no writer reuses a part name, but a file can still be rewritten in
+    // place under a cached path: copy the larger part's .dat/.idx over
+    // the smaller one (same name, new bytes/size/mtime) — the plan-time
+    // validation cache must re-validate, not serve the old page
+    // count/bounds
+    val Seq(small, large) = graft.spark.StateFiles.manifestFileList(dir).get
+      .map(_.stripSuffix(".dat"))
+    for (ext <- Seq(".dat", ".idx"))
+      Files.copy(java.nio.file.Paths.get(dir, large + ext),
+        java.nio.file.Paths.get(dir, small + ext),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val c2 = graft.spark.StateFiles.read(spark, dir, 0).count()
-    assert(c2 == items.count(),
-      s"stale sidecar cache: read $c2 of ${items.count()} after rewrite")
+    assert(c2 == 2 * items.count(),
+      s"stale sidecar cache: read $c2 of ${2 * items.count()} after rewrite")
   }
 
   test("DSv2 sidecar cache retains per-SPLIT bounds and re-keys on the " +
